@@ -283,8 +283,14 @@ class KeyedTable:
             self._log_cache[path] = hit
         return hit
 
-    def _latest_version(self) -> int:
-        versions = [int(n.split(".", 1)[0]) for n in self._log_names()
+    def _latest_version(self, names: list[str] | None = None) -> int:
+        """Newest committed version (0: no table). ``names``, here and
+        in the other log readers, is a ``_log_names()`` listing taken
+        once by a caller that resolves several things against the
+        same version; None lists the log now."""
+        if names is None:
+            names = self._log_names()
+        versions = [int(n.split(".", 1)[0]) for n in names
                     if n.endswith(".json") and not n.endswith(".ckpt.json")]
         return max(versions, default=0)
 
@@ -305,11 +311,11 @@ class KeyedTable:
         construction."""
         return self._read_log_json(self._entry_path(version))["config"]
 
-    def _meta(self) -> dict:
+    def _meta(self, names: list[str] | None = None) -> dict:
         """Current table config (latest commit object's). Kept under
         the historical name: callers treat it as the live metadata
         record."""
-        v = self._latest_version()
+        v = self._latest_version(names)
         if v < 1:
             raise FileNotFoundError(f"table not initialized: {self.path}")
         cfg = dict(self._config_at(v))
@@ -317,8 +323,8 @@ class KeyedTable:
             cfg.pop("cluster", None)
         return cfg
 
-    def _schema(self) -> T.StructType:
-        return T.StructType.fromJson(json.loads(self._meta()["schema"]))
+    def _schema(self, names: list[str] | None = None) -> T.StructType:
+        return T.StructType.fromJson(json.loads(self._meta(names)["schema"]))
 
     def _bucket_expr(self, n_buckets: int):
         # one py4j round trip (F.expr) instead of ~6 column-op calls:
@@ -329,14 +335,17 @@ class KeyedTable:
         return F.expr(
             f"CAST(pmod(xxhash64({cols}), {int(n_buckets)}) AS INT)")
 
-    def _owners(self, version: int) -> dict[int, str | None]:
+    def _owners(self, version: int,
+                names: list[str] | None = None) -> dict[int, str | None]:
         """bucket id -> data dir name whose files hold that bucket's
         rows at ``version`` (None: bucket currently empty). A pure
         metadata fold: start from the latest checkpoint object at or
         below ``version`` and apply the commit entries after it —
         O(_CKPT_EVERY) object reads regardless of table age."""
+        if names is None:
+            names = self._log_names()
         ckpts = sorted(
-            int(n.split(".", 1)[0]) for n in self._log_names()
+            int(n.split(".", 1)[0]) for n in names
             if n.endswith(".ckpt.json")
             and int(n.split(".", 1)[0]) <= version)
         owners: dict[int, str | None] = {}
@@ -460,15 +469,19 @@ class KeyedTable:
         data plane it prunes row groups via footer statistics before
         their chunk bytes are fetched, with the exact residual filter
         applied executor-side — same result either way."""
-        if not self.exists():
+        names = self._log_names()  # one LIST resolves the whole read
+        version = self._latest_version(names)
+        if version < 1:
             raise FileNotFoundError(f"table not initialized: {self.path}")
-        return self._snapshot(self._latest_version(), columns=columns,
-                              predicate=predicate)
+        return self._snapshot(version, columns=columns,
+                              predicate=predicate, names=names)
 
     def _read_buckets(self, buckets: list[int]) -> DataFrame:
         """Current state of the given buckets only — the path-pruned
         slice a mutation batch joins against."""
-        return self._snapshot(self._latest_version(), buckets)
+        names = self._log_names()
+        return self._snapshot(self._latest_version(names), buckets,
+                              names=names)
 
     def _resolve_version(self, timestamp_bound: str) -> int:
         """Timestamp bound -> version id (last commit at or before the
@@ -505,21 +518,23 @@ class KeyedTable:
     def _snapshot(self, version: int,
                   only_buckets: list[int] | None = None,
                   columns: list[str] | None = None,
-                  predicate: list[tuple] | None = None) -> DataFrame:
+                  predicate: list[tuple] | None = None,
+                  names: list[str] | None = None) -> DataFrame:
         """The table state at ``version``, optionally restricted to a
         bucket subset, projected to ``columns``, and/or filtered by a
         conjunctive ``predicate``. Resolution is commit-log metadata
         only (the `_owners` fold); the scan's path list contains
         EXACTLY the requested buckets' current leaf directories —
         pruning happens before the file index is even built, and no
-        data is scanned to resolve a snapshot."""
-        owners = self._owners(version)
+        data is scanned to resolve a snapshot. The schema is the
+        latest commit's (``names``: see :meth:`_latest_version`)."""
+        owners = self._owners(version, names)
         only = (None if only_buckets is None
                 else {int(b) for b in only_buckets})
         leafs = [posixpath.join(self.path, "data", d, f"{_BUCKET_COL}={b}")
                  for b, d in sorted(owners.items())
                  if d is not None and (only is None or b in only)]
-        schema = self._schema()
+        schema = self._schema(names)
         known = {f.name for f in schema.fields}
         if columns is not None:
             bad = [c for c in columns if c not in known]

@@ -204,8 +204,14 @@ _DIST_LIST_MIN_DIRS = 8
 #: Partition packing: target bytes of parquet objects per scan task.
 #: One object per task matches the native source's file-split
 #: granularity when objects are tens of MB (the n_buckets /
-#: flush_rows sizing), but a small-object layout then pays Python
-#: worker spin-up and task scheduling PER TINY OBJECT (guide §4/§6).
+#: flush_rows sizing), but a small-object layout then pays the
+#: per-task constant PER TINY OBJECT: scheduling plus a reused Python
+#: worker's set-up before the UDF runs (workers are forked once and
+#: reused, so it is not spin-up). That set-up measured 0.31-0.34
+#: CPU-s per task while every task re-parsed pyspark.zip, and ~0.05
+#: CPU-s since the engine's worker daemon stopped it (pyspark/
+#: daemon.py; local[4], trivial mapInArrow); whether packing still
+#: pays at the smaller constant is not measured yet.
 #: Packing bins objects into ~this many bytes per task, floored at
 #: the cluster's default parallelism so a small scan still fills
 #: every core; object sizes ride the snapshot LIST for free.
@@ -436,9 +442,10 @@ def read_parquet(spark: SparkSession, leaf_dirs: list[str],
                 yield from out.to_batches()
 
     # bins of ~_PACK_TARGET_BYTES per task (floored at the cluster's
-    # parallelism): one tiny object per task would pay Python-worker
-    # and scheduling overhead per object; large objects still get a
-    # task each, matching the native source's split granularity
+    # parallelism): one tiny object per task would pay the per-task
+    # constant (see _PACK_TARGET_BYTES) per object; large objects
+    # still get a task each, matching the native source's split
+    # granularity
     bins = _pack_files(sized, _PACK_TARGET_BYTES,
                        spark.sparkContext.defaultParallelism)
     paths = spark.createDataFrame([(b,) for b in bins],

@@ -24,8 +24,9 @@ hook yet; the explicit ``columns`` option projects the fetch the same
 way ``KeyedTable.read(columns=...)`` does.
 
 Read path: one :class:`InputPartition` per ~pack-target bytes of
-data objects (small objects bin together so Python-worker spin-up
-and per-task overhead amortize instead of repeating per tiny object;
+data objects (small objects bin together so the per-task constant
+amortizes instead of repeating per tiny object — see
+``objstore_plane._PACK_TARGET_BYTES``;
 sizes ride the snapshot LIST for free — the plane's ``_pack_files``
 discipline), the snapshot's file list computed driver-side from the
 commit log's ``_owners`` fold — so the partition list IS the pruned
@@ -278,12 +279,14 @@ class KeyedTableDataSource(DataSource):
 
         t, backend = self._handle()
         bound = self.options.get("timestamp_bound")
-        version = (t._resolve_version(bound) if bound
-                   else t._latest_version())
+        version = t._resolve_version(bound) if bound else None
+        names = t._log_names()  # one LIST serves version and owners
+        if version is None:
+            version = t._latest_version(names)
         if version == 0:
             raise FileNotFoundError(
                 f"table not initialized: {self.options.get('path')}")
-        owners = t._owners(version)
+        owners = t._owners(version, names)
         leafs = [posixpath.join(t.path, "data", d,
                                 f"{_BUCKET_COL}={b}")
                  for b, d in sorted(owners.items()) if d is not None]

@@ -432,6 +432,38 @@ def test_schema_evolution_opt_in(spark, tmp_path):
     assert set(t2.read().columns) == {"id", "a"}
 
 
+def test_read_lists_the_log_once(spark, tmp_path, monkeypatch):
+    """read() resolves version, bucket owners and schema from ONE
+    listing of ``_log`` (a LIST round trip each on an object store);
+    read_at still takes its schema from the latest commit, so an
+    evolved column reads NULL at a pre-evolution bound."""
+    from datetime import datetime, timezone
+
+    from dataflowtemplates_spark.operators import fsio
+    t = KeyedTable(spark, str(tmp_path / "once"), ["id"],
+                   n_buckets=4, schema_evolution=True)
+    t.apply_mutations(spark.createDataFrame([Row(id=1, a="x")]), "INSERT")
+    bound = datetime.now(timezone.utc).isoformat()
+    t.apply_mutations(
+        spark.createDataFrame([Row(id=2, a="y", b=7)]), "INSERT")
+
+    listed = []
+    orig = fsio.list_dir
+
+    def counting(path):
+        listed.append(path)
+        return orig(path)
+    monkeypatch.setattr(fsio, "list_dir", counting)
+    df = t.read()
+    assert listed == [t._log_dir()]
+    monkeypatch.setattr(fsio, "list_dir", orig)
+    assert {r.id: (r.a, r.b) for r in df.collect()} == {
+        1: ("x", None), 2: ("y", 7)}
+    old = t.read_at(bound)
+    assert old.columns == ["id", "a", "b"]
+    assert [tuple(r) for r in old.collect()] == [(1, "x", None)]
+
+
 def test_changes_between_reconciles_snapshots(spark, tmp_path):
     """CDC soundness property: for ANY mutation sequence and any bound
     pair, applying the change feed to the older snapshot reproduces
